@@ -585,7 +585,6 @@ def duplicate_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Connected components over (verified) near-duplicate pairs ->
     ``(doc_id, cluster_rep)`` with rep = min id in the component — the
@@ -613,22 +612,26 @@ def duplicate_clusters(
     """
     import warnings
 
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .unionAll(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
-        .localCheckpoint()
-    )
+    from schema_fantasy_spark import scale
+
+    half = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")).localCheckpoint()
+    edges = half.unionAll(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # r9 size-adaptive switch (the broadcast-join pattern applied to
     # components): a near-dup graph that fits the driver comfortably —
     # the overwhelmingly common case even at corpus scale, because the
-    # EDGE set is the near-duplicate subset — resolves in one collect +
-    # union-find instead of O(log diameter) rounds of 3 joins + a count
-    # each (~1 s of pure scheduling per round on tiny frames; measured
-    # 3.6 s for a 652-edge graph). Same result by construction: rep =
-    # min id per connected component, one row per edge endpoint.
-    # Graphs past the bound take the distributed rounds unchanged.
-    n_edges = edges.count()  # edges is checkpointed: a cheap cached count
-    if n_edges <= driver_max_edges:
+    # EDGE set is the near-duplicate subset — resolves in one bounded
+    # Arrow collect + union-find instead of O(log diameter) rounds of 3
+    # joins + a count each (~1 s of pure scheduling per round on tiny
+    # frames; measured 3.6 s for a 652-edge graph). The budget is
+    # scale.driver_row_budget, derived from spark.driver.memory. Same
+    # result by construction: rep = min id per connected component, one
+    # row per edge endpoint. Graphs past the budget take the distributed
+    # rounds unchanged.
+    local = scale.collect_within_budget(half)
+    if local is not None:
+        import pyarrow as pa
+        from pyspark.sql import types as T
+
         parent: dict = {}
 
         def find(x):
@@ -639,8 +642,7 @@ def duplicate_clusters(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in edges.collect():
-            u, v = row["u"], row["v"]
+        for u, v in zip(local.column("u").to_pylist(), local.column("v").to_pylist()):
             for n_ in (u, v):
                 if n_ not in parent:
                     parent[n_] = n_
@@ -652,15 +654,14 @@ def duplicate_clusters(
             r = find(n_)
             if r not in rep or n_ < rep[r]:
                 rep[r] = n_
-        out_rows = [(n_, rep[find(n_)]) for n_ in sorted(parent)]
-        from pyspark.sql import types as T
-
         id_type = edges.schema["u"].dataType
         schema = T.StructType([
             T.StructField("doc_id", id_type),
             T.StructField("cluster_rep", id_type),
         ])
-        return pairs.sparkSession.createDataFrame(out_rows, schema)
+        nodes = list(parent)
+        table = pa.table({"doc_id": nodes, "cluster_rep": [rep[find(n_)] for n_ in nodes]})
+        return pairs.sparkSession.createDataFrame(table, schema)
     # initial label: min(self, direct neighbors) — one round for free
     labels = edges.groupBy("u").agg(
         F.least(F.first("u"), F.min("v")).alias("label")

@@ -11,6 +11,10 @@ one reducer task. The fix is the classic two-phase salted aggregate:
 
 ``salt = pmod(xxhash64(row-unique-expr), S)`` keeps the split deterministic.
 For algebraic aggregates (count/sum/min/max) the rewrite is exact.
+
+The opposite end of the size range lives here too: ``collect_within_budget``
+is the one size switch for iterative graph operators (PageRank, connected
+components) whose input is usually small enough to resolve on the driver.
 """
 
 from __future__ import annotations
@@ -260,3 +264,39 @@ def exact_quantile_buckets(
         mapping, f"{score_col} {stype}, {out_col} int"
     )
     return df.join(F.broadcast(mdf), score_col, "left")
+
+
+# ------------------------------------------------ driver-side fast paths
+
+#: share of ``spark.driver.memory`` one driver-side fast path may fill
+DRIVER_MEMORY_SHARE = 1 / 8
+#: estimated driver bytes per collected row: the JVM's Arrow buffers plus
+#: the Python objects (ids, dict entries) a graph fast path builds per edge
+DRIVER_ROW_BYTES = 512
+
+
+def driver_row_budget(spark) -> int:
+    """Rows a driver-side fast path may collect:
+    ``DRIVER_MEMORY_SHARE`` of ``spark.driver.memory`` over
+    ``DRIVER_ROW_BYTES`` (8g -> 2,097,152 rows; 1g -> 262,144). The size
+    is read through the JVM so a unitless value means MiB, as in Spark."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    mb = conf.getSizeAsMb("spark.driver.memory", "1g")
+    return int(mb * 2**20 * DRIVER_MEMORY_SHARE) // DRIVER_ROW_BYTES
+
+
+def collect_within_budget(df: DataFrame):
+    """One bounded Arrow collect that picks between a driver fast path and
+    the distributed one: returns ``df``'s rows as a ``pyarrow.Table`` when
+    there are at most ``driver_row_budget`` of them, else None (after
+    fetching ``budget + 1`` rows, the price of the probe past the bound).
+
+    Arrow keeps the collect columnar (no ``Row`` objects) and its ints
+    exact with NULLs (pandas would turn a nullable BIGINT into floats).
+    Build the fast path's result with ``spark.createDataFrame(table,
+    schema)``: an Arrow-built local relation plans as ``LocalTableScan``
+    and collects with 0 jobs, where a list of tuples plans as ``Scan
+    ExistingRDD`` and pays a Python-worker job on every consumption."""
+    budget = driver_row_budget(df.sparkSession)
+    table = df.limit(budget + 1).toArrow()
+    return table if table.num_rows <= budget else None

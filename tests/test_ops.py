@@ -2164,10 +2164,11 @@ def test_jpeg_batched_codec_bitstream_pinned():
         "f52b2e975a7dae595239462a2b30775d"
 
 
-def test_duplicate_clusters_driver_path_matches_distributed(spark):
+def test_duplicate_clusters_driver_path_matches_distributed(spark, monkeypatch):
     """r9 size-adaptive switch: small edge sets resolve by driver-side
     union-find; result must equal the distributed min-label rounds on
     chains, cliques, forks and singleton-free graphs."""
+    from schema_fantasy_spark import scale
     from schema_fantasy_spark.ops import dedup
 
     edges = (
@@ -2181,8 +2182,40 @@ def test_duplicate_clusters_driver_path_matches_distributed(spark):
         (r["doc_id"], r["cluster_rep"])
         for r in dedup.duplicate_clusters(pairs).collect()
     }
+    monkeypatch.setattr(scale, "driver_row_budget", lambda spark: 0)
     slow = {
         (r["doc_id"], r["cluster_rep"])
-        for r in dedup.duplicate_clusters(pairs, driver_max_edges=0).collect()
+        for r in dedup.duplicate_clusters(pairs).collect()
     }
     assert fast == slow and len(fast) == 20 + 3 + 4 + 2
+
+
+def test_duplicate_clusters_budget_boundary(spark, monkeypatch):
+    """The size switch's boundary: exactly ``budget`` pair rows resolve
+    on the driver (an Arrow-built LocalTableScan), ``budget + 1`` take
+    the distributed rounds (checkpointed ExistingRDD scans), and both
+    give identical clusters."""
+    import contextlib
+    import io
+
+    from schema_fantasy_spark import scale
+    from schema_fantasy_spark.ops import dedup
+
+    edges = [(i, i + 1) for i in range(0, 12, 2)] + [(1, 3), (20, 21), (21, 22)]
+    pairs = spark.createDataFrame(edges, "id_a: long, id_b: long")
+
+    def run(budget):
+        monkeypatch.setattr(scale, "driver_row_budget", lambda spark: budget)
+        out = dedup.duplicate_clusters(pairs)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            out.explain("simple")
+        rows = {(r["doc_id"], r["cluster_rep"]) for r in out.collect()}
+        return rows, buf.getvalue()
+
+    at, at_plan = run(len(edges))
+    past, past_plan = run(len(edges) - 1)
+    assert "LocalTableScan" in at_plan and "ExistingRDD" not in at_plan
+    assert "ExistingRDD" in past_plan and "LocalTableScan" not in past_plan
+    assert at == past
+    assert dict(at)[3] == 0 and dict(at)[22] == 20 and len(at) == 12 + 3

@@ -221,18 +221,20 @@ def test_multimodal_decode_no_shuffle(spark):
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
 
 
-def test_duplicate_clusters_bounded_plan(spark):
+def test_duplicate_clusters_bounded_plan(spark, monkeypatch):
     """the cluster loop's localCheckpoint() must truncate lineage: the
     final plan depends on the LAST round only (scan of checkpointed RDDs
     + one join), not a 20-round join tower."""
+    from schema_fantasy_spark import scale
     from schema_fantasy_spark.ops import dedup
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40, 2)], "id_a: long, id_b: long"
     )
-    # driver_max_edges=0 forces the DISTRIBUTED rounds this test pins
-    # (the r9 size-adaptive switch resolves graphs this small driver-side)
-    clusters = dedup.duplicate_clusters(pairs, driver_max_edges=0)
+    # a driver budget of 0 rows forces the DISTRIBUTED rounds this test
+    # pins (the size-adaptive switch resolves graphs this small driver-side)
+    monkeypatch.setattr(scale, "driver_row_budget", lambda spark: 0)
+    clusters = dedup.duplicate_clusters(pairs)
     plan = plan_of(clusters, mode="simple")
     # a checkpointed plan reads "Scan ExistingRDD"; an unbounded one would
     # nest SortMergeJoin/union towers many levels deep
@@ -240,17 +242,20 @@ def test_duplicate_clusters_bounded_plan(spark):
     assert plan.count("Join") <= 2, plan
 
 
-def test_duplicate_clusters_one_action_per_round(spark):
+def test_duplicate_clusters_one_action_per_round(spark, monkeypatch):
     """each propagation round must run exactly ONE Spark job: the
     changed-label count doubles as the lazy-checkpoint materialization
     (a separate convergence probe would double the round count — pure
     scheduler overhead on a cold cluster). Chain graph 0-2-4-...-38:
     pointer jumping converges in ~4 rounds + 1 confirming round."""
+    from schema_fantasy_spark import scale
     from schema_fantasy_spark.ops import dedup
 
     pairs = spark.createDataFrame(
         [(i, i + 2) for i in range(0, 38, 2)], "id_a: long, id_b: long"
     )
+    # force the distributed rounds (see test above)
+    monkeypatch.setattr(scale, "driver_row_budget", lambda spark: 0)
     sc = spark.sparkContext
     group = "cluster-job-audit"
     # AQE splits one action into a job per query stage, which would make
@@ -260,8 +265,7 @@ def test_duplicate_clusters_one_action_per_round(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup(group, "count jobs per cluster round")
     try:
-        # force the distributed rounds (see test above)
-        out = dedup.duplicate_clusters(pairs, driver_max_edges=0)
+        out = dedup.duplicate_clusters(pairs)
         n = out.count()
     finally:
         sc.setJobGroup(None, None)
@@ -326,14 +330,24 @@ def test_webtext_ops_plan_shapes(spark):
     assert "BroadcastHashJoin LeftOuter" not in p3, p3
 
 
-def test_pagerank_bounded_lineage_and_jobs(spark):
-    """ops/linkgraph.pagerank: the per-iteration lazy localCheckpoint
-    must truncate lineage — the returned plan reads an ExistingRDD and
-    carries only the LAST iteration's joins (an untruncated 5-iteration
-    plan would nest 3^5 subtrees and dozens of joins) — and a full
-    materialization must stay a bounded number of jobs (1 final action;
-    broadcast exchanges for N and the per-iteration dangling aggregate
-    account for the rest)."""
+def test_pagerank_bounded_lineage_and_jobs(spark, monkeypatch):
+    """ops/linkgraph.pagerank on both sides of its size switch.
+
+    Driver path (a graph within scale.driver_row_budget), under the
+    session defaults (AQE on): the returned plan is an Arrow-built
+    ``LocalTableScan``, and building plus collecting it launches at most
+    3 jobs — the bounded edge collect's query stages — where the lazy
+    per-iteration checkpoints cost 55 on a 19-node graph (CLAUDE.md
+    trap 24).
+
+    Distributed path (budget forced to 0): the per-iteration lazy
+    localCheckpoint must truncate lineage — the returned plan reads an
+    ExistingRDD and carries only the LAST iteration's joins (an
+    untruncated 5-iteration plan would nest 3^5 subtrees and dozens of
+    joins) — and a full materialization must stay a bounded number of
+    jobs (1 final action; broadcast exchanges for N and the
+    per-iteration dangling aggregate account for the rest)."""
+    from schema_fantasy_spark import scale
     from schema_fantasy_spark.ops.linkgraph import pagerank
 
     edges = spark.createDataFrame(
@@ -341,11 +355,24 @@ def test_pagerank_bounded_lineage_and_jobs(spark):
         + [("h7", "h0")],  # h7 dangles (never a dst of the cycle part)
         "src: string, dst: string",
     )
+    sc = spark.sparkContext
+    group = "pagerank-driver-job-audit"
+    sc.setJobGroup(group, "count jobs for one driver-path pagerank")
+    try:
+        local = pagerank(edges, iterations=5)
+        n = len(local.collect())
+    finally:
+        sc.setJobGroup(None, None)
+    assert n == 8
+    assert "LocalTableScan" in plan_of(local, "simple")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, f"{len(jobs)} jobs: {sorted(jobs)}"
+
+    monkeypatch.setattr(scale, "driver_row_budget", lambda spark: 0)
     plan = plan_of(pagerank(edges, iterations=5), "simple")
     assert "ExistingRDD" in plan
     assert plan.count("Join") <= 4, plan
 
-    sc = spark.sparkContext
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     group = "pagerank-job-audit"
