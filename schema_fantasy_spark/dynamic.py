@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
+from schema_fantasy_spark import pyworker
 from schema_fantasy_spark.errors import ERRORS_SCHEMA, errs_to_rows
 from schema_fantasy_spark.compiler.plan import compile_schema
 
@@ -36,6 +37,7 @@ def json_errors_udf(schema: Any, refs: Optional[Dict[str, Any]] = None):
 
     @pandas_udf(ERRORS_SCHEMA)
     def _validate(docs: pd.Series) -> pd.Series:
+        pyworker.install()
         validate = compiled.validate
 
         def one(doc):

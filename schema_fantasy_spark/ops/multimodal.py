@@ -50,6 +50,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from schema_fantasy_spark import pyworker
+
 IMAGE_META_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("width", T.IntegerType()),
@@ -438,6 +440,7 @@ def image_metadata(df: DataFrame, binary_col: str = "html", id_col: str = "id") 
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, widths, heights, fmts, sizes, phashes = [], [], [], [], [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):
@@ -503,6 +506,7 @@ def image_features(
         raise ValueError("dim must be a perfect square (grid features)")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, feats = [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):
@@ -567,6 +571,7 @@ def image_resize(
         raise ValueError(f"unknown method {method!r}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, ws, hs, pxs = [], [], [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):
@@ -632,6 +637,7 @@ def sample_frames(
     from schema_fantasy_spark.ops.video import parse_avi
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, idxs, blobs = [], [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):
@@ -696,6 +702,7 @@ def video_keyframe_hashes(
     from schema_fantasy_spark.ops.video import parse_avi
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, idxs, ws, hs, phashes = [], [], [], [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):
@@ -764,6 +771,7 @@ def video_metadata(df: DataFrame, binary_col: str = "html", id_col: str = "id") 
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, kinds, ws, hs, nfs, durs = [], [], [], [], [], []
             codecs, profs, lvls = [], [], []
@@ -861,6 +869,7 @@ def video_frames(
     from schema_fantasy_spark.ops.vp8 import Vp8StreamDecoder
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, idxs, ws, hs, phashes = [], [], [], [], []
 
@@ -958,6 +967,7 @@ def video_frame_index(
     from schema_fantasy_spark.ops.video import parse_mp4_samples
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, codecs, idxs, offs, szs, keys = [], [], [], [], [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):
@@ -1160,6 +1170,7 @@ def audio_metadata(df: DataFrame, binary_col: str = "html", id_col: str = "id") 
     like $parse)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, rates, chans, frames, durs, rmss = [], [], [], [], [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):
@@ -1372,6 +1383,7 @@ def audio_resample(
     the row level."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, srs, nins, nouts, outs = [], [], [], [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):
@@ -1470,6 +1482,7 @@ def audio_fingerprints(
     every decode seam in this module)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             ids, fps = [], []
             for i, payload in zip(pdf[id_col], pdf[binary_col]):

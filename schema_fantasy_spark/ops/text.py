@@ -1,5 +1,6 @@
-"""Text analysis operators for training-data pipelines — all native
-Column expressions (regex, HOFs, hashes); no Python in the data path.
+"""Text analysis operators for training-data pipelines — native Column
+expressions (regex, HOFs, hashes), except two Arrow UDFs: the Gopher
+n-gram counts (`repetition_metrics`) and the zlib compression ratio.
 
 * token counting      — whitespace tokens + a BPE-ish subword estimate
 * quality scoring     — length / punctuation / stopword / repetition ratios
@@ -14,6 +15,7 @@ from typing import Dict, List
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from schema_fantasy_spark import pyworker
 from schema_fantasy_spark.ops.dedup import tokens_col
 
 # compact marker sets per language (function words; heuristic, documented)
@@ -182,45 +184,59 @@ GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 GOPHER_DUP_NGRAM_CHARS_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 
 
-def _grams_col(tk: Column, n_tokens: Column, n: int) -> Column:
-    """Word ``n``-gram array (all occurrences, order preserved)."""
-    return F.when(
-        n_tokens >= n,
-        F.transform(
-            F.sequence(F.lit(1), n_tokens - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tk, i, n)),
-        ),
-    ).otherwise(F.expr("array()").cast("array<string>"))
+#: the 16 exact per-document counts of `_repetition_counts`
+_REP_FIELDS = (
+    [f"top{g}" for g in (2, 3, 4)] + ["dup3"]
+    + [f"{k}{g}" for g in range(5, 11) for k in ("tot", "dist")]
+)
 
 
-def _mode_count(grams: Column) -> Column:
-    """Occurrences of the most frequent element: sort + ONE linear
-    run-length fold (O(w log w) per doc, fully JVM-side). The naive
-    distinct x filter formulation is O(distinct x n) — ~10^10
-    comparisons for one pathological 100k-word document, a
-    straggler-task generator at corpus scale (measured in round 2)."""
+def _repetition_counts(tk):
+    """Arrow kernel over a batch of token arrays (NULL counts as empty).
+    Per document: ``top{2,3,4}`` occurrences of the most frequent n-gram,
+    ``dup3`` 3-gram occurrences beyond each distinct one's first, and
+    ``tot{5..10}`` / ``dist{5..10}`` characters over all / distinct
+    n-grams, an n-gram being its tokens joined by one space.
 
-    def step(acc, x):
-        run = F.when(x.eqNullSafe(acc.prev), acc.run + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"), run.alias("run"), F.greatest(acc.best, run).alias("best")
-        )
+    Vectorized over the batch: the id of the n-gram at token i is the
+    ``pd.factorize`` code of (id of the (n-1)-gram at i, id of token
+    i+n-1), the document folded into the 1-gram ids, so each n is one
+    hash pass over the batch and every per-document figure a bincount."""
+    import numpy as np
+    import pandas as pd
 
-    return F.aggregate(
-        F.array_sort(grams),
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-        ),
-        step,
-        lambda acc: acc.best,
-    )
-
-
-def _char_sum(grams: Column) -> Column:
-    """Total characters across the gram array (0 when empty)."""
-    return F.aggregate(grams, F.lit(0), lambda acc, x: acc + F.length(x))
+    pyworker.install()
+    n = np.fromiter((0 if t is None else len(t) for t in tk), np.int64, len(tk))
+    docs = len(n)
+    out = {f: np.zeros(docs, np.int64) for f in _REP_FIELDS}
+    flat = np.concatenate([np.empty(0, object), *(t for t in tk if t is not None)])
+    tok, uniq = pd.factorize(flat)
+    doc = np.repeat(np.arange(docs), n)
+    left = np.repeat(np.cumsum(n), n) - np.arange(len(flat))  # tokens to doc end
+    cum = np.concatenate(([0], np.cumsum([len(w) for w in flat], dtype=np.int64)))
+    gid = pd.factorize(doc * len(uniq) + tok)[0]
+    pos = np.arange(len(flat))
+    for g in range(2, 11):
+        pos = pos[left[pos] >= g]
+        if not len(pos):
+            break
+        codes = pd.factorize(gid[pos] * len(uniq) + tok[pos + g - 1])[0]
+        gid[pos] = codes
+        d = doc[pos]
+        doc_of = np.empty(codes.max() + 1, np.int64)
+        doc_of[codes] = d
+        if g <= 4:
+            np.maximum.at(out[f"top{g}"], doc_of, np.bincount(codes))
+        if g == 3:
+            out["dup3"] = np.bincount(d, minlength=docs) - np.bincount(doc_of, minlength=docs)
+        if g >= 5:
+            # float64 bincount sums are exact integers below 2**53
+            chars = cum[pos + g] - cum[pos] + (g - 1)
+            out[f"tot{g}"] = np.bincount(d, chars, docs).astype(np.int64)
+            gram_chars = np.empty(len(doc_of), np.int64)
+            gram_chars[codes] = chars
+            out[f"dist{g}"] = np.bincount(doc_of, gram_chars, docs).astype(np.int64)
+    return pd.DataFrame(out)
 
 
 def repetition_metrics(
@@ -238,8 +254,7 @@ def repetition_metrics(
 ) -> DataFrame:
     """Gopher repetition/quality rules over word n-grams — the full
     pre-training corpus filter family (Rae et al. 2021, "Scaling
-    Language Models", table A1), re-expressed as one pass of native
-    higher-order functions:
+    Language Models", table A1):
 
     * ``frac_top_{bigram,trigram,fourgram}`` — occurrences of the most
       frequent 2/3/4-gram over all such n-grams (repetitive boilerplate
@@ -255,56 +270,37 @@ def repetition_metrics(
     * ``gopher_pass``      — every threshold holds and the word count is
       in [min_words, max_words].
 
-    One shuffle-free pass; tokens materialize once behind a Generate
-    barrier. Only the three MODE counts need a sort + run-length fold
-    (O(w log w) per doc); every duplicate metric is hash-based
-    (``dupchars == totchars - chars(array_distinct)`` and ``dupn ==
-    size - size(array_distinct)``) — on typical web docs wall-clock is
-    dominated by materializing the nine n-gram arrays either way, but
-    the hash path drops six sorts, which is what matters on the
-    pathological 100k-word stragglers. At 10^12 docs this runs at scan
-    bandwidth like the other text ops."""
-    from schema_fantasy_spark.ops.dedup import _barrier, _ensure_parallelism, tokens_col
+    One shuffle-free pass. Tokens materialize once behind a Generate
+    barrier; tokenization and the word, symbol and line rules are native.
+    The n-gram rules are ONE scalar Arrow UDF over the token array
+    (`_repetition_counts`, exact integer counts); Spark does every
+    division and ``round``, so no float is computed in Python."""
+    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
+    from schema_fantasy_spark.ops.dedup import (
+        _assert_staging_free, _barrier, _ensure_parallelism, tokens_col,
+    )
+
+    src = df.select(F.col(id_col), F.col(text_col))
+    _assert_staging_free(src, "_tk", "_rc")
     base = _barrier(
-        _ensure_parallelism(df.select(F.col(id_col), F.col(text_col)), keys=(id_col,)),
-        tokens_col(F.col(text_col)),
-        "_tk",
+        _ensure_parallelism(src, keys=(id_col,)), tokens_col(F.col(text_col)), "_tk"
     )
     tk = F.col("_tk")
     n = F.size(tk)
+    schema = ", ".join(f"{f} long" for f in _REP_FIELDS)
+    # explicit PandasUDFType: trap 5 (`from __future__ import annotations`)
+    counts = pandas_udf(schema, PandasUDFType.SCALAR)(_repetition_counts)
+    based = base.select("*", counts(tk).alias("_rc"))
 
-    # any expression consumed more than once materializes behind a
-    # barrier (HOF expressions get no common-subexpression elimination
-    # and evaluate interpreted): the n=3 gram array feeds mode +
-    # distinct; each n=5..10 gram array feeds two char-sum folds whose
-    # results both appear twice downstream — so the ARRAY gets a barrier
-    # and then the (tot, dist) char-sum STRUCT gets one on top. n=2 and
-    # n=4 are single-use (mode only) and need neither.
-    based = _barrier(base, _grams_col(tk, n, 3), "_g3")
-    for g in (5, 6, 7, 8, 9, 10):
-        based = _barrier(based, _grams_col(tk, n, g), f"_g{g}")
-        grams = F.col(f"_g{g}")
-        based = _barrier(
-            based,
-            F.struct(
-                _char_sum(grams).alias("tot"),
-                _char_sum(F.array_distinct(grams)).alias("dist"),
-            ),
-            f"_c{g}",
-        )
-
-    def n_grams(g: int) -> Column:
-        return F.greatest(n - (g - 1), F.lit(0))
-
-    def top_frac(g: int) -> Column:
-        grams = F.col("_g3") if g == 3 else _grams_col(tk, n, g)
-        return F.round(_mode_count(grams) / F.greatest(n_grams(g), F.lit(1)), 6)
+    def per_gram(count: Column, g: int) -> Column:
+        n_grams = F.greatest(n - (g - 1), F.lit(0))
+        return F.round(count / F.greatest(n_grams, F.lit(1)), 6)
 
     def dup_chars_frac(g: int) -> Column:
-        tot = F.col(f"_c{g}.tot")
+        tot = F.col(f"_rc.tot{g}")
         return F.round(
-            (tot - F.col(f"_c{g}.dist")) / F.greatest(tot, F.lit(1)), 6
+            (tot - F.col(f"_rc.dist{g}")) / F.greatest(tot, F.lit(1)), 6
         )
 
     t = F.col(text_col)
@@ -316,14 +312,10 @@ def repetition_metrics(
     cols = [
         F.col(id_col),
         n.alias("n_words"),
-        top_frac(2).alias("frac_top_bigram"),
-        top_frac(3).alias("frac_top_trigram"),
-        top_frac(4).alias("frac_top_fourgram"),
-        F.round(
-            (F.size(F.col("_g3")) - F.size(F.array_distinct(F.col("_g3"))))
-            / F.greatest(n_grams(3), F.lit(1)),
-            6,
-        ).alias("frac_dup_trigrams"),
+        per_gram(F.col("_rc.top2"), 2).alias("frac_top_bigram"),
+        per_gram(F.col("_rc.top3"), 3).alias("frac_top_trigram"),
+        per_gram(F.col("_rc.top4"), 4).alias("frac_top_fourgram"),
+        per_gram(F.col("_rc.dup3"), 3).alias("frac_dup_trigrams"),
         *[dup_chars_frac(g).alias(f"frac_dup_{g}gram_chars") for g in range(5, 11)],
         F.round(no_alpha / F.greatest(n, F.lit(1)), 6).alias("frac_no_alpha"),
         F.round(
@@ -460,6 +452,8 @@ def with_compression_ratio(
     @pandas_udf("long", PandasUDFType.SCALAR)
     def _ratio(s):
         import zlib
+
+        pyworker.install()
 
         def one(t):
             if t is None:

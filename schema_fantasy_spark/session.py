@@ -36,6 +36,12 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # the generated-class cache (default 100 entries) is a Guava cache
+        # split into segments of ~25, each evicting on its own: a warm
+        # pages benchmark pass recompiled 26 whole-stage classes every
+        # pass (CodegenMetrics compilation count); 1000 entries recompile
+        # none (CLAUDE.md trap 26)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

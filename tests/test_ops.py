@@ -413,6 +413,112 @@ def test_repetition_metrics_adversarial_length(spark):
     assert elapsed < 60, f"repetition_metrics took {elapsed:.1f}s on 50k words"
 
 
+# Reference for the n-gram rules of tx.repetition_metrics: the interpreted
+# higher-order-function folds the Arrow kernel replaced, kept verbatim.
+def _hof_grams(tk, n_tokens, n):
+    return F.when(
+        n_tokens >= n,
+        F.transform(
+            F.sequence(F.lit(1), n_tokens - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(tk, i, n)),
+        ),
+    ).otherwise(F.expr("array()").cast("array<string>"))
+
+
+def _hof_mode_count(grams):
+    def step(acc, x):
+        run = F.when(x.eqNullSafe(acc.prev), acc.run + 1).otherwise(F.lit(1))
+        return F.struct(
+            x.alias("prev"), run.alias("run"), F.greatest(acc.best, run).alias("best")
+        )
+
+    return F.aggregate(
+        F.array_sort(grams),
+        F.struct(
+            F.lit(None).cast("string").alias("prev"),
+            F.lit(0).alias("run"),
+            F.lit(0).alias("best"),
+        ),
+        step,
+        lambda acc: acc.best,
+    )
+
+
+def _hof_char_sum(grams):
+    return F.aggregate(grams, F.lit(0), lambda acc, x: acc + F.length(x))
+
+
+def _hof_ngram_metrics(df):
+    tk = dedup.tokens_col(F.col("text"))
+    n = F.size(tk)
+
+    def n_grams(g):
+        return F.greatest(n - (g - 1), F.lit(0))
+
+    def top_frac(g):
+        return F.round(
+            _hof_mode_count(_hof_grams(tk, n, g)) / F.greatest(n_grams(g), F.lit(1)), 6
+        )
+
+    def dup_chars_frac(g):
+        grams = _hof_grams(tk, n, g)
+        tot = _hof_char_sum(grams)
+        dist = _hof_char_sum(F.array_distinct(grams))
+        return F.round((tot - dist) / F.greatest(tot, F.lit(1)), 6)
+
+    g3 = _hof_grams(tk, n, 3)
+    return df.select(
+        "doc_id",
+        n.alias("n_words"),
+        top_frac(2).alias("frac_top_bigram"),
+        top_frac(3).alias("frac_top_trigram"),
+        top_frac(4).alias("frac_top_fourgram"),
+        F.round(
+            (F.size(g3) - F.size(F.array_distinct(g3))) / F.greatest(n_grams(3), F.lit(1)),
+            6,
+        ).alias("frac_dup_trigrams"),
+        *[dup_chars_frac(g).alias(f"frac_dup_{g}gram_chars") for g in range(5, 11)],
+    )
+
+
+def test_repetition_metrics_kernel_matches_hof_reference(spark):
+    """Seeded randomized differential: the Arrow kernel's n-gram rules
+    equal the interpreted-fold reference row for row. The inputs mix
+    separators Java's \\s splits on (space, \\t, \\n, \\x0b, \\x0c, \\r)
+    with Unicode spaces it keeps inside tokens (U+00A0, U+3000),
+    astral-plane characters, case pairs whose lowercase changes length
+    ('İ'), NULL and empty text, and documents shorter than every n."""
+    import random
+
+    rng = random.Random(20241018)
+    vocab = ["a", "b", "ab", "Ab", "İ", "ıi", "Σσς", "𝔘𝔫", "😀", "x😀y",
+             "no break", "wide　gap", "1", "22", "#", "...", "…", "ü"]
+    seps = [" ", " ", " ", "  ", "\t", "\n", "\x0b", "\x0c", "\r", " ",
+            "　"]
+    rows = [(0, None), (1, ""), (2, "   "), (3, "one"), (4, " 　")]
+    for i in range(5, 1200):
+        k = rng.choice([1, 2, 3, 4, 5, 6, 9, 10, 11, rng.randint(12, 80)])
+        pool = vocab[: rng.randint(2, len(vocab))]  # small pools repeat n-grams
+        words = [rng.choice(pool) for _ in range(k)]
+        if i % 4 == 0:  # a repeated phrase: long duplicate n-grams
+            words = (words[: rng.randint(1, 12)] * rng.randint(2, 5))[:80]
+        text = rng.choice(seps[:3])
+        for w in words:
+            text += w + rng.choice(seps)
+        rows.append((i, text))
+    df = spark.createDataFrame(rows, "doc_id: long, text: string")
+    ref = _hof_ngram_metrics(df)
+    got = tx.repetition_metrics(df).select(*ref.columns)
+    ref, got = ({r["doc_id"]: r.asDict() for r in d.collect()} for d in (ref, got))
+    assert len(got) == len(rows)
+    mismatched = [i for i in ref if ref[i] != got[i]]
+    assert not mismatched, [(ref[i], got[i]) for i in mismatched[:3]]
+    assert got[0]["n_words"] is None and got[0]["frac_top_bigram"] == 0.0
+    # the fixture exercises every rule: some documents repeat n-grams
+    assert any(r["frac_dup_10gram_chars"] > 0 for r in got.values())
+    assert any(r["frac_top_fourgram"] > 0.5 for r in got.values())
+
+
 def test_duplicate_clusters_and_keep_best(spark):
     """Connected components over near-dup pairs: chains merge into one
     cluster (min-id rep), disjoint cliques stay separate; the keep

@@ -504,7 +504,9 @@ def test_parsers_reject_staging_name_collisions(spark):
     """Staging through fixed internal names must fail loudly when the
     caller's DataFrame already carries one (silent clobber otherwise)."""
     from schema_fantasy_spark.ops.boilerplate import with_block_stats
+    from schema_fantasy_spark.ops.charset import transcode
     from schema_fantasy_spark.ops.sitemap import parse_sitemaps
+    from schema_fantasy_spark.ops.text import repetition_metrics
 
     df = spark.createDataFrame(
         [("h", "<urlset/>", "clash")],
@@ -517,6 +519,14 @@ def test_parsers_reject_staging_name_collisions(spark):
     )
     with pytest.raises(ValueError, match="__blocks"):
         with_block_stats(bp)
+    raw = spark.createDataFrame(
+        [(1, bytearray(b"hi"), "mine")], "doc_id long, html binary, _cs_raw string"
+    )
+    with pytest.raises(ValueError, match="_cs_raw"):
+        transcode(raw)
+    docs = spark.createDataFrame([(1, "a b")], "_rc long, text string")
+    with pytest.raises(ValueError, match="_rc"):
+        repetition_metrics(docs, id_col="_rc")
 
 
 def test_nfc_lengths_exactly_one_arrow_slice(spark):
@@ -545,3 +555,21 @@ def test_nfc_lengths_exactly_one_arrow_slice(spark):
     assert {r["s"]: r["verdict"] for r in dflt.collect()} == {
         "ÅBC": False, "x": False
     }
+
+
+def test_repetition_metrics_one_arrow_kernel(spark):
+    """The Gopher n-gram rules run as ONE scalar Arrow UDF over the
+    barriered token array: exactly one ArrowEvalPython node, and the
+    only Generate barrier is the `_tk` token array (no per-n `_g*` gram
+    arrays or `_c*` char-sum structs)."""
+    from schema_fantasy_spark.ops import text as tx
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i} w{i} x y") for i in range(20)], "doc_id: long, text: string"
+    )
+    plan = plan_of(tx.repetition_metrics(docs))
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
+    assert "BatchEvalPython" not in plan
+    generated = re.findall(r"^Arguments: explode\(.*, \[(\w+)#\d+\]$", plan, re.M)
+    assert len(re.findall(r"\(\d+\) Generate", plan)) == len(generated) == 1, plan
+    assert generated == ["_tk"], generated
